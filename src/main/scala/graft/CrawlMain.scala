@@ -34,7 +34,10 @@ import org.apache.spark.sql.SparkSession
  *                  staleness for long crawls; 0/absent = cache forever, the
  *                  prior behavior)
  *                  [--max-body-bytes=N]  (http mode: page bodies read at most
- *                  N bytes then truncate-at-cap with error_kind=Truncated —
+ *                  N bytes; a longer body truncates at the cap and is
+ *                  parsed as that prefix (outcome ok — this job's outcomes
+ *                  table derives error_kind from the outcome; only the
+ *                  streaming outcome feed marks error_kind=Truncated) —
  *                  bounds executor memory against huge/hostile responses;
  *                  robots.txt always caps at 512 KiB. 0 = unbounded, the
  *                  reference's exact read_to_end behavior. Default 16 MiB)
@@ -79,7 +82,7 @@ object CrawlMain {
       .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // survive stalls >120 s in local mode (see SparkSuite/Bench note)
+      // survive stalls >120 s in local mode (see SparkSuite note)
       .config("spark.storage.blockManagerHeartbeatTimeoutMs", "600000")
     // extra confs for experiments: SPARK_GRAFT_CONF="k=v;k2=v2"
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))

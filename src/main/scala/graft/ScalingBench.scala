@@ -1,7 +1,8 @@
 package graft
 
-import graft.corpus.{CorpusConfig, CorpusGen}
-import graft.operators.{CrawlConfig, FrontierStep}
+import graft.corpus.{CorpusConfig, CorpusGen, CorpusTables}
+import graft.operators.{CrawlConfig, FrontierStep, SeenPrefilter}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
 
 /**
@@ -37,6 +38,15 @@ object ScalingBench {
     "java.base/sun.security.action", "java.base/sun.util.calendar",
   ).map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
 
+  /** Every corpus page as a gen-0 task row — the full-corpus frontier. */
+  private def allPages(spark: SparkSession, cfg: CorpusConfig): DataFrame = {
+    import spark.implicits._
+    CorpusTables.eachPage(spark, cfg) { (_, h, p) =>
+      val url = CorpusGen.pageUrl(h, p)
+      (url, CorpusGen.hostName(h), FrontierStep.priorityOf(url), 0L, 0, 0)
+    }.toDF("url", "host", "priority", "next_fetch", "retry_count", "gen")
+  }
+
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("pure")) { purePath(); return }
     if (args.headOption.contains("http")) { httpPath(); return }
@@ -55,7 +65,7 @@ object ScalingBench {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark"))
       .config("spark.ui.enabled", "false")
-      // survive stalls >120 s in local mode (see SparkSuite/Bench note)
+      // survive stalls >120 s in local mode (see SparkSuite note)
       .config("spark.storage.blockManagerHeartbeatTimeoutMs", "600000")
     if (isCluster) {
       val coresPerExec =
@@ -166,9 +176,9 @@ object ScalingBench {
       val warmCorpus = CorpusConfig(seed = 7L, numHosts = 60000, maxPages = 30000)
       val warmCfg = CrawlConfig(corpus = warmCorpus, perHostCap = 50,
         bloomExpectedItems = 1L << 18, fetchMode = graft.operators.FetchMode.Generator)
-      val wf = BenchFrontier.allPages(spark, warmCorpus)
+      val wf = allPages(spark, warmCorpus)
       val wstep = FrontierStep.step(spark, wf,
-        wf.select(col("url")).limit(1), None,
+        wf.select(col("url")).limit(1), SeenPrefilter.Off,
         graft.corpus.CorpusTables.documents(spark, warmCorpus), warmCfg, 0)
       wstep.outcomes.count(); wstep.discovered.count()
       wstep.persisted.foreach(_.unpersist(blocking = false))
@@ -192,7 +202,7 @@ object ScalingBench {
     val ssCfg = CrawlConfig(corpus = ssCorpus, perHostCap = 200,
       bloomExpectedItems = 1L << 23, fetchMode = graft.operators.FetchMode.Generator,
       carryHostThroughDedup = carryHost)
-    val megaFrontier = BenchFrontier.allPages(spark, ssCorpus)
+    val megaFrontier = allPages(spark, ssCorpus)
     // distributed seed-seen (a LIMIT would execute as one straggler task)
     val seedSeen = megaFrontier.select(col("url"))
       .filter(pmod(xxhash64(col("url")), lit(2000)) === 0)
@@ -208,7 +218,7 @@ object ScalingBench {
     def tr(what: String): Unit =
       if (trace) System.err.println(f"TRACE ${(System.nanoTime() - t0) / 1e9}%.2f $what")
     val (fetched, discovered) = sm.labelled(0, "steady_state") {
-      val step = FrontierStep.step(spark, megaFrontier, seedSeen, None, ssDocs, ssCfg, 0)
+      val step = FrontierStep.step(spark, megaFrontier, seedSeen, SeenPrefilter.Off, ssDocs, ssCfg, 0)
       tr("step constructed")
       val o = step.outcomes.count()
       tr("outcomes counted")
@@ -254,7 +264,6 @@ object ScalingBench {
     spark.stop()
   }
 
-  /** Pure-thread hot path (no Spark): the machine's per-core compute ceiling. */
   /** `http` mode: ONE steady-state generation through the PRODUCTION fetch
    * path — real loopback sockets, robots.txt fetched over the wire for
    * every cache-miss host, per-partition pooled HTTP clients, the tolerant
@@ -280,7 +289,7 @@ object ScalingBench {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark"))
       .config("spark.ui.enabled", "false")
-      // survive stalls >120 s in local mode (see SparkSuite/Bench note)
+      // survive stalls >120 s in local mode (see SparkSuite note)
       .config("spark.storage.blockManagerHeartbeatTimeoutMs", "600000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -349,19 +358,19 @@ object ScalingBench {
     {
       val wCorpus = CorpusConfig(seed = 7L, numHosts = 500, maxPages = 500)
       // served pages come from `corpus` — warm against real corpus hosts
-      val wf = BenchFrontier.allPages(spark, wCorpus)
+      val wf = allPages(spark, wCorpus)
       val ws = FrontierStep.step(spark, wf, wf.select(
-        org.apache.spark.sql.functions.col("url")).limit(1), None,
+        org.apache.spark.sql.functions.col("url")).limit(1), SeenPrefilter.Off,
         graft.corpus.CorpusTables.documents(spark, wCorpus), cfg, 0)
       ws.outcomes.count(); ws.discovered.count()
       ws.persisted.foreach(_.unpersist(blocking = false))
     }
 
-    val frontier = BenchFrontier.allPages(spark, corpus)
+    val frontier = allPages(spark, corpus)
     val seedSeen = frontier.select(org.apache.spark.sql.functions.col("url")).limit(1)
     val docs = graft.corpus.CorpusTables.documents(spark, corpus) // unused in Http mode
     val t0 = System.nanoTime()
-    val step = FrontierStep.step(spark, frontier, seedSeen, None, docs, cfg, 0)
+    val step = FrontierStep.step(spark, frontier, seedSeen, SeenPrefilter.Off, docs, cfg, 0)
     val fetched = step.outcomes.count()
     val ok = step.outcomes.filter(org.apache.spark.sql.functions
       .col("outcome") === "ok").count()
@@ -381,6 +390,8 @@ object ScalingBench {
     sys.exit(0)
   }
 
+  /** Pure-thread hot path (no Spark): the machine's per-core compute ceiling
+   * for the Generator fetch + extract kernel. */
   private def purePath(): Unit = {
     val cfg = CorpusConfig(seed = 42L, numHosts = 400000, maxPages = 150000)
     def work(tid: Int, iters: Int): Long = {
@@ -389,11 +400,8 @@ object ScalingBench {
       while (i < iters) {
         val h = (tid * 31 + i) % cfg.numHosts
         val p = i % math.max(1, CorpusGen.pageCount(cfg, h))
-        val base = CorpusGen.pageUrl(h, p)
-        CorpusGen.pageHrefs(cfg, h, p).foreach { href =>
-          graft.core.UrlCanon.resolveCanonHost(base, href)
-            .foreach { case (u, ho) => acc += u.length + ho.length }
-        }
+        FrontierStep.corpusCandidates(cfg, CorpusGen.pageUrl(h, p))
+          .foreach { case (u, ho) => acc += u.length + ho.length }
         i += 1
       }
       acc

@@ -2,7 +2,7 @@ package graft
 
 import graft.corpus.{CorpusConfig, CorpusGen, CorpusTables}
 import graft.functions.UrlFunctions
-import graft.operators.{CrawlConfig, Dedup, FetchMode, FrontierStep, HostGraph, Multimodal, Politeness, QualityGate, Similarity}
+import graft.operators.{CrawlConfig, Dedup, FetchMode, FrontierStep, HostGraph, Multimodal, Politeness, QualityGate, SeenPrefilter, Similarity}
 import graft.oracle.OracleSqlGen
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -32,7 +32,7 @@ object SparkEntry {
     val docs = CorpusTables.documents(spark, cfg.corpus)
     val frontier = FrontierStep.seedFrontier(spark, CorpusGen.seeds(cfg.corpus, 3))
     val seen = frontier.select("url")
-    val res = FrontierStep.step(spark, frontier, seen, None, docs, cfg, gen = 0)
+    val res = FrontierStep.step(spark, frontier, seen, SeenPrefilter.Off, docs, cfg, gen = 0)
     res.discovered.orderBy("url")
   }
 
@@ -258,7 +258,9 @@ object SparkEntry {
       val cfg = CrawlConfig(useRobots = false,
         filter = graft.core.HostFilter.Blacklist(Seq("h3.example")),
         fetchMode = FetchMode.CorpusJoin)
-      FrontierStep.step(s, frontier, seen, Some(sketch), docs, cfg, gen = 0)
+      val prefilter = SeenPrefilter.Bloom(
+        s.sparkContext.broadcast(new graft.functions.ShardedBloom(Array(sketch))))
+      FrontierStep.step(s, frontier, seen, prefilter, docs, cfg, gen = 0)
         .discovered.orderBy("url")
     }),
     // --- multimodal: media blob metadata plumbing (testdata-derived blobs) ------------------------

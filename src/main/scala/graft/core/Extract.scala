@@ -39,6 +39,18 @@ object Extract {
   def rawHrefs(html: String): Seq[String] =
     HtmlScan.parse(html, buildSpans = false).hrefs
 
+  /** The per-page candidate kernel every fetch path runs (reference worker:
+   * extract → normalise, worker.rs:68-119): each href resolved against
+   * `base`, scheme-filtered, canonicalized and host-split in one parse
+   * (UrlCanon.resolveCanonHost), then deduplicated within the page
+   * (defaultnormaliser.rs:22-34) — first occurrence wins, document order
+   * kept. Yields canonical (url, host) pairs. */
+  def pageCandidates(base: String, hrefs: IterableOnce[String]): Iterator[(String, String)] = {
+    val inPage = new java.util.HashSet[String]()
+    hrefs.iterator.flatMap(href =>
+      UrlCanon.resolveCanonHost(base, href).filter(c => inPage.add(c._1)))
+  }
+
   /** Full raw-HTML pipeline: UTF-8 decode → anchor scan → resolve → scheme filter. */
   def linksFromHtml(baseUrl: String, body: Array[Byte]): Seq[String] =
     UrlCanon.decodeUtf8(body).toSeq.flatMap(h =>

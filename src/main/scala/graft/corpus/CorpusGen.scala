@@ -56,7 +56,9 @@ object CorpusGen {
    * steady-state generation. Semantics preserved, incl. the regex's
    * leading-zero acceptance ("h007" resolves host 7); indices beyond Int
    * range classify by magnitude (host ≥ numHosts ⇒ Unreachable, page ≥
-   * pageCount ⇒ NotFound) where the old `.toInt` threw. */
+   * pageCount ⇒ NotFound) where the old `.toInt` threw. The parse reads at
+   * most 18 digits per index: a host or page index of 19 or more digits
+   * gives NotFound (not Unreachable) — no corpus href produces one. */
   def resolvePage(cfg: CorpusConfig, url: String): PageLookup = {
     if (url != null && url.startsWith("http://h")) {
       val n = url.length

@@ -1,7 +1,7 @@
 package graft.corpus
 
 import graft.model.Document
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 
 /** Spark materialization of the deterministic corpus. The generator is a
  * pure function of (cfg, h, p), so the resulting Dataset is identical
@@ -12,8 +12,17 @@ object CorpusTables {
    * one row per page, generated executor-side (no driver materialization). */
   def documents(spark: SparkSession, cfg: CorpusConfig): Dataset[Document] = {
     import spark.implicits._
+    eachPage(spark, cfg)(CorpusGen.pageDoc)
+  }
+
+  /** One row `row(cfg, h, p)` per corpus page, generated executor-side: the
+   * range of global page ids splits over the default parallelism and each id
+   * finds its host by binary search over the driver-side prefix sums of the
+   * per-host page counts (tiny: one Long per host). */
+  def eachPage[T: Encoder](spark: SparkSession, cfg: CorpusConfig)(
+      row: (CorpusConfig, Int, Int) => T): Dataset[T] = {
     val pagesPerHost = (0 until cfg.numHosts).map(h => CorpusGen.pageCount(cfg, h))
-    val offsets = pagesPerHost.scanLeft(0L)(_ + _) // prefix sums, driver-side tiny
+    val offsets = pagesPerHost.scanLeft(0L)(_ + _)
     val total = offsets.last
     val bc = spark.sparkContext.broadcast((cfg, offsets.toArray))
     spark.range(0, total, 1, spark.sparkContext.defaultParallelism)
@@ -21,13 +30,12 @@ object CorpusTables {
         val (c, offs) = bc.value
         it.map { boxed =>
           val gid = boxed.longValue()
-          // binary search host for this global page id
           var lo = 0; var hi = offs.length - 2
           while (lo < hi) {
             val mid = (lo + hi + 1) >>> 1
             if (offs(mid) <= gid) lo = mid else hi = mid - 1
           }
-          CorpusGen.pageDoc(c, lo, (gid - offs(lo)).toInt)
+          row(c, lo, (gid - offs(lo)).toInt)
         }
       }
   }

@@ -165,8 +165,12 @@ object SeenShard {
 
 object ShardStore {
 
-  /** Shard of url u — same routing hash as round 2's ShardedBloom, so
-   * assembled sketches stay compatible with the broadcast compat path. */
+  /** Bloom shard fill ratio that triggers a per-shard rebuild with doubled
+   * geometry (0.5 is the designed load). */
+  val FillCap: Double = 0.47
+
+  /** Shard of url u — the same routing hash as ShardedBloom, so sketches
+   * assembled from the shard files probe correctly on the broadcast path. */
   @inline def routeOf(u: String, n: Int): Int =
     Math.floorMod(BloomSketch.hash(u, ShardedBloom.RouteSalt), n.toLong).toInt
 
@@ -345,8 +349,9 @@ object ShardStore {
     }
   }
 
-  /** Driver-side read of all shard files (tests / small-scale inspection
-   * ONLY — the crawl loop never does this). */
+  /** Driver-side read of all shard files. The crawl loop calls it every
+   * generation whose bloom sketch fits `CrawlConfig.sketchBroadcastMaxBytes`
+   * (the broadcast probe regime); it is also the test / inspection view. */
   def readAll(io: TableIO, gen: Int, numShards: Int): Seq[SeenShard] =
     (0 until numShards).flatMap { i =>
       val f = s"${io.sketchDir(gen)}/" + f"shard_$i%05d.bin"

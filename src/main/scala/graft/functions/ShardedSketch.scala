@@ -5,10 +5,11 @@ package graft.functions
  * (SeenPrefilter.Bloom + NativeExpressions.shardedBloomProbe): when the
  * sketch is small enough that shipping it once per executor beats routing
  * every candidate row to its shard's partition, a broadcast handle plus the
- * codegen'd probe expression is the faster plan (used by the single-sketch
- * FrontierStep overload, e.g. catalogue q24).
+ * codegen'd probe expression is the faster plan — the crawl loop assembles
+ * one from the shard files while the sketch is small (CrawlConfig.
+ * sketchBroadcastMaxBytes); catalogue q24 wraps a single sketch.
  *
- * The crawl loop's production seen-sketch does NOT live here — it is the
+ * The crawl loop's durable seen-sketch does NOT live here — it is the
  * partitioned, never-collected `RDD[SeenShard]` (SeenShards.scala), which
  * also owns construction, union-merge, per-shard growth, deletion and
  * per-shard checkpointing. This class is intentionally probe-only.
@@ -31,6 +32,4 @@ object ShardedBloom {
   def create(numShards: Int, expectedItemsPerShard: Long, fpp: Double): ShardedBloom =
     new ShardedBloom(Array.fill(numShards)(BloomSketch.create(expectedItemsPerShard, fpp)))
 
-  /** One sketch wrapped as a single-shard partition (compat path). */
-  def single(sketch: BloomSketch): ShardedBloom = new ShardedBloom(Array(sketch))
 }

@@ -117,7 +117,7 @@ object CrawlLoop {
       }
     }
 
-    val useSketch = cfg.useBloomPrefilter && cfg.seenSketch != "none"
+    val useSketch = cfg.seenSketch != "none"
     val shardsN = math.max(1, cfg.sketchShards)
     val perShardExpected = math.max(64L, cfg.bloomExpectedItems / shardsN)
 
@@ -185,10 +185,8 @@ object CrawlLoop {
         // priori). Filtered hosts are never contacted, as everywhere.
         cfg.fetchMode match {
           case graft.operators.FetchMode.Http(rw, cTo, rTo, w, _) if cfg.useRobots =>
-            val f = cfg.filter
-            val keepSeed = udf((h: String) => f.keep(if (h == null) "" else h))
             FrontierStep.fetchRobotsRules(
-                seedDf.filter(keepSeed(col("host"))).select("host")
+                FrontierStep.filterHosts(seedDf, cfg.filter).select("host")
                   .distinct().as[String], rw, cTo, rTo, w)
               .filter(col("definitive")).drop("definitive") // transient robots failures re-fetch at candidacy
               .withColumn("fetched_gen", lit(0))
@@ -382,7 +380,7 @@ object CrawlLoop {
           stageMetrics.labelled(gen, "sketch_build") {
             val updated = ShardStore.update(
               prev, res.discovered.select("url").as[String])
-            (updated, ShardStore.write(updated, io.sketchDir(gen), cfg.shardFillCap))
+            (updated, ShardStore.write(updated, io.sketchDir(gen), ShardStore.FillCap))
           }
         }}
       awaitAll(Seq(
@@ -467,7 +465,7 @@ object CrawlLoop {
                 Some(cfg.seenSketch))
               .getOrElse(updated) // files just written; fallback can't happen
             val healthy = ShardStore.rebuildDegraded(
-              fromFiles, seenAll, cfg.shardFillCap, cfg.bloomFpp, Some(degraded))
+              fromFiles, seenAll, ShardStore.FillCap, cfg.bloomFpp, Some(degraded))
             // only the rebuilt shards' files need rewriting — the healthy
             // ones' files from the write above are already current
             ShardStore.write(healthy, io.sketchDir(gen), onlyIds = Some(degraded))

@@ -1,9 +1,10 @@
 package graft.operators
 
-import graft.core.HostFilter
+import graft.core.{Extract, HostFilter, Robots, UrlCanon}
 import graft.corpus.{CorpusConfig, CorpusGen}
 import graft.functions.{BloomSketch, UrlFunctions}
-import graft.model.{Document, Outcome}
+import graft.model.{Document, Outcome, Span, Task}
+import graft.sources.{FetchResult, HttpFetcher}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -35,8 +36,15 @@ object FetchMode {
   final case class Http(rewrite: String => String = identity,
       connectTimeoutMs: Int = 5000, requestTimeoutMs: Int = 20000,
       fetchWindow: Int = 16,
-      maxBodyBytes: Long = graft.sources.HttpFetcher.DefaultMaxBodyBytes) extends FetchMode
+      maxBodyBytes: Long = HttpFetcher.DefaultMaxBodyBytes) extends FetchMode
 }
+
+/** One Http-fetched page after extraction (FrontierStep.fetchHttp) — all
+ * that leaves the fetch partition: outcome + error kind, the canonical
+ * in-page-deduped (url, host) candidates, and the span sequence and parse
+ * coverage when archiving (Nil / 0.0 otherwise). */
+final case class FetchedPage(outcome: String, errorKind: String,
+    links: Seq[(String, String)], spans: Seq[Span], parseCov: Double)
 
 /** Engine configuration for the BSP crawl loop. */
 final case class CrawlConfig(
@@ -58,7 +66,6 @@ final case class CrawlConfig(
     maxRetries: Int = 3,
     bloomExpectedItems: Long = 1L << 20,
     bloomFpp: Double = 0.01,
-    useBloomPrefilter: Boolean = true,
     /** Seen-sketch flavour: "bloom" (partitioned, union-merged, per-shard
      * growable), "cuckoo" (deletion-capable, shards probed in place), or
      * "none" (every candidate takes the exact anti-join). */
@@ -73,9 +80,6 @@ final case class CrawlConfig(
      * default: well under executor/driver headroom, far above any sketch
      * that would make the routed shuffle noticeable. */
     sketchBroadcastMaxBytes: Long = 64L << 20,
-    /** Bloom shard fill ratio that triggers a per-bucket rebuild with
-     * doubled geometry (0.5 is the designed load). */
-    shardFillCap: Double = 0.47,
     /** fetch-generation → host substrings whose seen entries are RETRACTED
      * at the start of that generation (retro-blacklist purge): removed from
      * the seen table and deleted from a cuckoo sketch, so rediscovered URLs
@@ -159,31 +163,14 @@ final case class StepResult(
  */
 object FrontierStep {
 
-  import graft.model.Span
-
   /** Canonical seed tasks at gen 0 (deterministic priority from url hash). */
   def seedFrontier(spark: SparkSession, urls: Seq[String]): DataFrame = {
     import spark.implicits._
-    urls.flatMap(graft.core.UrlCanon.canonicalize)
+    urls.flatMap(UrlCanon.canonicalize)
       .distinct
-      .map(u => (u, graft.core.UrlCanon.hostOf(u), 0, 0L, 0, 0))
+      .map(u => (u, UrlCanon.hostOf(u), 0, 0L, 0, 0))
       .toDF("url", "host", "priority", "next_fetch", "retry_count", "gen")
   }
-
-  /** Compat overload: a bare bloom sketch (or none) as the prefilter. */
-  def step(
-      spark: SparkSession,
-      frontier: DataFrame,
-      seen: DataFrame,
-      seenBloom: Option[BloomSketch],
-      docs: Dataset[Document],
-      cfg: CrawlConfig,
-      gen: Int): StepResult =
-    step(spark, frontier, seen,
-      seenBloom.map(b => SeenPrefilter.Bloom(
-          spark.sparkContext.broadcast(graft.functions.ShardedBloom.single(b))))
-        .getOrElse(SeenPrefilter.Off),
-      docs, cfg, gen)
 
   def step(
       spark: SparkSession,
@@ -276,50 +263,20 @@ object FrontierStep {
         // no spans), so the cache is cheap; span-heavy data still never
         // caches in this mode.
         fetchable.withColumn("outcome", classify(col("url"))).persist()
-      case FetchMode.Http(rewrite, cTo, rTo, window, maxBody) =>
+      case http: FetchMode.Http =>
         // production shape: fetch + extract + normalise as ONE mapPartitions
-        // (one pooled client per executor, downloader.rs:13-21; up to
-        // `window` requests pipelined in flight per partition — see
-        // FetchMode.Http scaladoc); the page body never leaves the
-        // partition — only the per-page-deduped canonical (url, host)
-        // pairs, the outcome, and (when archiving) the parsed span sequence
-        // do. PERSISTED: the outcomes / links / rejects branches must not
-        // re-fetch the network.
-        val rw = rewrite
+        // (fetchHttp); the page body never leaves the partition — only the
+        // per-page-deduped canonical (url, host) pairs, the outcome, and
+        // (when archiving) the parsed span sequence do. PERSISTED: the
+        // outcomes / links / rejects branches must not re-fetch the network.
         val doArchive = cfg.archiveFetched
         fetchable
           .select("url", "host", "priority", "next_fetch", "retry_count", "gen")
-          .as[graft.model.Task]
-          .mapPartitions { it =>
-            lazy val client = graft.sources.HttpFetcher.sharedClient(cTo)
-            graft.sources.HttpFetcher.fetchWindowed(
-                client, it, (tk: graft.model.Task) => rw(tk.url), rTo, window, maxBody)
-              .map { case (tk, r) =>
-              val (outcome, links, spans, cov) =
-                if (r.outcome != Outcome.Ok) (r.outcome, Nil, Nil, 0.0)
-                else graft.core.UrlCanon.decodeUtf8(r.body) match {
-                  case None => (Outcome.Err, Nil, Nil, 0.0) // undecodable page ⇒ Parsing error (errors.rs:122-140)
-                  case Some(html) =>
-                    // ONE tokenizer pass yields hrefs + spans + coverage; the
-                    // archive span parse (S7) happens HERE, inside the fetch
-                    // partition — the raw body never leaves it
-                    // (archive/rmq.rs:29-43 analogue). parse_cov is exact
-                    // under the tolerant tokenizer (Extract.spanCoverage).
-                    val (hrefs, allSp, cv) = graft.core.Extract.parsePage(html, doArchive)
-                    val inPage = new java.util.HashSet[String]()
-                    val ls = hrefs.iterator.flatMap { href =>
-                      graft.core.UrlCanon.resolveCanonHost(tk.url, href) match {
-                        case Some((u, host)) if inPage.add(u) => Iterator.single((u, host))
-                        case _ => Iterator.empty
-                      }
-                    }.toSeq
-                    val sp = if (doArchive) allSp else Nil
-                    (Outcome.Ok, ls, sp, if (doArchive) cv else 0.0)
-                }
-              (tk.url, tk.host, tk.priority, tk.next_fetch, tk.retry_count, tk.gen,
-                outcome, links, spans, cov)
-            }
-          }
+          .as[Task]
+          .mapPartitions(it => fetchHttp(it, http, doArchive).map { case (tk, pg) =>
+            (tk.url, tk.host, tk.priority, tk.next_fetch, tk.retry_count, tk.gen,
+              pg.outcome, pg.links, pg.spans, pg.parseCov)
+          })
           .toDF("url", "host", "priority", "next_fetch", "retry_count", "gen",
             "outcome", "links", "spans", "parse_cov")
           .persist()
@@ -361,53 +318,30 @@ object FrontierStep {
     // The link streams emit (url, host) or canonical url only, per
     // cfg.carryHostThroughDedup (shuffle-bytes vs recompute trade, see flag).
     val carryHost = cfg.carryHostThroughDedup
-    val links = cfg.fetchMode match {
+    val okPages = fetched.filter(col("outcome") === Outcome.Ok)
+    val pairs = cfg.fetchMode match {
       case FetchMode.CorpusJoin =>
-        // the durable span table: links are kind='link' spans, resolved and
-        // canonicalized by the fused single-parse UDF
-        fetched.filter(col("outcome") === Outcome.Ok)
-          .select(col("url").as("base_url"),
-            explode(filter(col("spans"), s => s.getField("kind") === Span.Link)).as("span"))
-          .select(col("base_url"), col("span.media_ref").as("href"))
-          .withColumn("rch", UrlFunctions.resolveCanonHost(col("base_url"), col("href")))
-          .filter(col("rch").isNotNull)
-          .select((col("rch._1").as("url") +:
-            (if (carryHost) Seq(col("rch._2").as("host")) else Nil)): _*)
+        // the durable span table: links are kind='link' spans
+        spanLinks(okPages.select(col("url").as("base_url"), col("spans")))
       case FetchMode.Generator =>
         // inline fetch+extract+normalise as ONE typed mapPartitions — the
         // production HTTP path's shape (SURVEY S5; the reference worker runs
         // fetch→extract→normalise per task, worker.rs:70-119). One row
         // crossing per candidate instead of three UDF boundaries + explode;
-        // within-page dedup (reference P7, defaultnormaliser.rs:22-34)
-        // shrinks the global dedup shuffle.
-        val pairs = fetched.filter(col("outcome") === Outcome.Ok).select("url").as[String]
-          .mapPartitions { it =>
-            it.flatMap { base =>
-              CorpusGen.resolvePage(corpusCfg, base) match {
-                case CorpusGen.PageLookup.Found(h, p) =>
-                  val inPage = new java.util.HashSet[String]()
-                  CorpusGen.pageHrefs(corpusCfg, h, p).iterator.flatMap { href =>
-                    graft.core.UrlCanon.resolveCanonHost(base, href) match {
-                      case Some((u, host)) if inPage.add(u) => Iterator.single((u, host))
-                      case _ => Iterator.empty
-                    }
-                  }
-                case _ => Iterator.empty
-              }
-            }
-          }.toDF("url", "host")
-        if (carryHost) pairs else pairs.select("url")
+        // within-page dedup shrinks the global dedup shuffle.
+        okPages.select("url").as[String]
+          .mapPartitions(_.flatMap(corpusCandidates(corpusCfg, _)))
+          .toDF("url", "host")
       case _: FetchMode.Http =>
         // links already extracted + canonicalized + page-deduped in the fetch pass
-        val pairs = fetched.filter(col("outcome") === Outcome.Ok)
-          .select(explode(col("links")).as("l"))
+        okPages.select(explode(col("links")).as("l"))
           .select(col("l._1").as("url"), col("l._2").as("host"))
-        if (carryHost) pairs else pairs.select("url")
     }
+    val links = if (carryHost) pairs.select("url", "host") else pairs.select("url")
 
     // --- P7: per-generation dedup (map-side partial via AQE + shuffle) -------
     val obsLinks = new org.apache.spark.sql.Observation(s"links_g$gen")
-    val hostOfCanon = udf((u: String) => graft.core.UrlCanon.hostOfCanonical(u))
+    val hostOfCanon = udf((u: String) => UrlCanon.hostOfCanonical(u))
     val deduped = links.observe(obsLinks, count(lit(1)).as("n"))
       .dropDuplicates("url")
     val candidates =
@@ -417,14 +351,8 @@ object FrontierStep {
     val candidatesObs = candidates.observe(obsCandidates, count(lit(1)).as("n"))
 
     // --- F2/F3 + robots -------------------------------------------------------
-    val hostFilter = cfg.filter
-    val keepHost = udf((h: String) => hostFilter.keep(if (h == null) "" else h))
     val obsAllowed = new org.apache.spark.sql.Observation(s"allowed_g$gen")
-    // NoFilter keeps everything — don't pay a per-candidate UDF round-trip
-    // for a constant-true predicate (F1 is the common production setting)
-    val hostFiltered =
-      if (hostFilter == HostFilter.NoFilter) candidatesObs
-      else candidatesObs.filter(keepHost(col("host")))
+    val hostFiltered = filterHosts(candidatesObs, cfg.filter)
     var newRobotsOut: Option[DataFrame] = None
     val robotsFiltered =
       if (!cfg.useRobots) hostFiltered
@@ -460,7 +388,7 @@ object FrontierStep {
               fetchedRules.drop("definitive"))
             .reduce(_ unionByName _)
           val robotsAllowed = udf((ds: Seq[String], url: String) =>
-            graft.core.Robots.allowed(if (ds == null) Nil else ds, url))
+            Robots.allowed(if (ds == null) Nil else ds, url))
           // no broadcast hint: the rules side is semi-join-pruned to this
           // generation's candidate hosts, but that set is UNBOUNDED (the
           // politeness cap bounds per-host fetches, not distinct candidate
@@ -470,19 +398,7 @@ object FrontierStep {
           hostFiltered.join(rules.select("host", "disallows"), Seq("host"), "left")
             .filter(robotsAllowed(col("disallows"), col("url")))
             .drop("disallows")
-        case _ =>
-          // corpus modes: rules derived PER ROW from the deterministic
-          // corpus (a modulo on the parsed host index). The previous form —
-          // robotsTable → driver groupBy map → broadcast — cost ~12 s of
-          // serial driver wall per generation at 4.8M hosts (SizeEstimator +
-          // java-serialize + lz4 of a numHosts-sized HashMap, jstack-
-          // measured), paid identically at every cluster size: exactly the
-          // §2d/§2f "idle wall" term. Deriving at the row is free and scales
-          // with executors, not with the driver.
-          val robotsOk = udf((host: String, url: String) =>
-            graft.core.Robots.allowed(
-              CorpusGen.robotsForHostName(corpusCfg, host), url))
-          hostFiltered.filter(robotsOk(col("host"), col("url")))
+        case _ => corpusRobotsFilter(hostFiltered, corpusCfg)
       }
     val allowed = robotsFiltered.observe(obsAllowed, count(lit(1)).as("n"))
 
@@ -492,15 +408,13 @@ object FrontierStep {
     val discoveredUrls = prefilter match {
       case SeenPrefilter.Off =>
         allowed.join(seen, Seq("url"), "left_anti")
-      case pf if cfg.useBloomPrefilter =>
+      case pf =>
         val tagged = pf.tag(allowed).persist()
         persistedFrames += tagged
         val definitelyNew = tagged.filter(!col("_maybe")).drop("_maybe")
         val maybeSeen = tagged.filter(col("_maybe")).drop("_maybe")
         definitelyNew.unionByName(
           maybeSeen.join(seen, Seq("url"), "left_anti"))
-      case _ =>
-        allowed.join(seen, Seq("url"), "left_anti")
     }
 
     val discovered = discoveredUrls.select("url", "host").persist()
@@ -567,6 +481,80 @@ object FrontierStep {
   def priorityOf(url: String): Int =
     Math.floorMod(BloomSketch.hash(url, 0x70726fL), 10L).toInt
 
+  // --- per-task kernels shared by the batch step and the streaming surface --
+
+  /** Corpus-backed fetch + extract of one task URL (Generator mode): the
+   * page's candidates (Extract.pageCandidates); nothing for a missing page. */
+  def corpusCandidates(corpus: CorpusConfig, url: String): Iterator[(String, String)] =
+    CorpusGen.resolvePage(corpus, url) match {
+      case CorpusGen.PageLookup.Found(h, p) =>
+        Extract.pageCandidates(url, CorpusGen.pageHrefs(corpus, h, p))
+      case _ => Iterator.empty
+    }
+
+  /** Http fetch + extract of one partition's tasks: one pooled client per
+   * executor (downloader.rs:13-21), up to `fetchWindow` requests pipelined
+   * in flight (FetchMode.Http scaladoc), each response classified by
+   * `extractPage`. Output is in task order. */
+  def fetchHttp(tasks: Iterator[Task], mode: FetchMode.Http,
+      withSpans: Boolean): Iterator[(Task, FetchedPage)] = {
+    lazy val client = HttpFetcher.sharedClient(mode.connectTimeoutMs)
+    HttpFetcher.fetchWindowed(client, tasks, (tk: Task) => mode.rewrite(tk.url),
+        mode.requestTimeoutMs, mode.fetchWindow, mode.maxBodyBytes)
+      .map { case (tk, r) => (tk, extractPage(tk.url, r, withSpans)) }
+  }
+
+  /** One fetch response → page: a non-Ok fetch keeps its outcome; an Ok
+   * body that is not valid UTF-8 is the reference's Parsing error
+   * (errors.rs:122-140) ⇒ Err/InvalidPage; otherwise ONE tokenizer pass
+   * yields hrefs (+ spans and coverage when `withSpans`, the archive parse,
+   * archive/rmq.rs:29-43 analogue) and the hrefs run the candidate kernel.
+   * An Ok page keeps the fetch's error kind (`Truncated` at the body cap). */
+  private def extractPage(base: String, r: FetchResult, withSpans: Boolean): FetchedPage =
+    if (r.outcome != Outcome.Ok) FetchedPage(r.outcome, r.error_kind, Nil, Nil, 0.0)
+    else UrlCanon.decodeUtf8(r.body) match {
+      case None => FetchedPage(Outcome.Err, "InvalidPage", Nil, Nil, 0.0)
+      case Some(html) =>
+        val (hrefs, spans, cov) = Extract.parsePage(html, withSpans)
+        FetchedPage(Outcome.Ok, r.error_kind,
+          Extract.pageCandidates(base, hrefs).toSeq, spans, cov)
+    }
+
+  /** P1-P6 over span-model pages: the link spans of each (base_url, spans)
+   * row → (base_url, url, host) through the fused single-parse
+   * resolve+canonicalize+host UDF; unresolvable, non-http(s) and host-less
+   * links are dropped. */
+  def spanLinks(pages: DataFrame): DataFrame =
+    pages
+      .select(col("base_url"),
+        explode(filter(col("spans"), s => s.getField("kind") === Span.Link)).as("span"))
+      .select(col("base_url"),
+        UrlFunctions.resolveCanonHost(col("base_url"), col("span.media_ref")).as("rch"))
+      .filter(col("rch").isNotNull)
+      .select(col("base_url"), col("rch._1").as("url"), col("rch._2").as("host"))
+
+  /** F2/F3 white/blacklist on a frame with a `host` column. NoFilter keeps
+   * everything, so it costs no per-row UDF round-trip (the common setting). */
+  def filterHosts(df: DataFrame, hostFilter: HostFilter): DataFrame =
+    if (hostFilter == HostFilter.NoFilter) df
+    else {
+      val keep = udf((h: String) => hostFilter.keep(if (h == null) "" else h))
+      df.filter(keep(col("host")))
+    }
+
+  /** Robots on (url, host) rows in the corpus modes: rules derived PER ROW
+   * from the deterministic corpus (a modulo on the parsed host index). The
+   * previous form — robotsTable → driver groupBy map → broadcast — cost
+   * ~12 s of serial driver wall per generation at 4.8M hosts (SizeEstimator
+   * + java-serialize + lz4 of a numHosts-sized HashMap, jstack-measured),
+   * paid identically at every cluster size (and again per streaming
+   * restart). Deriving at the row is free and scales with executors. */
+  def corpusRobotsFilter(df: DataFrame, corpus: CorpusConfig): DataFrame = {
+    val robotsOk = udf((host: String, url: String) =>
+      Robots.allowed(CorpusGen.robotsForHostName(corpus, host), url))
+    df.filter(robotsOk(col("host"), col("url")))
+  }
+
   /** GET + parse `/robots.txt` for each host (pooled client per partition).
    * Returns (host, disallows, delay, definitive). Used per generation for
    * cache-miss candidate hosts AND at bootstrap for the seed hosts — without
@@ -589,16 +577,16 @@ object FrontierStep {
     val spark = hosts.sparkSession
     import spark.implicits._
     hosts.mapPartitions { it =>
-      lazy val client = graft.sources.HttpFetcher.sharedClient(connectTimeoutMs)
-      graft.sources.HttpFetcher.fetchWindowed(
+      lazy val client = HttpFetcher.sharedClient(connectTimeoutMs)
+      HttpFetcher.fetchWindowed(
           client, it, (h: String) => rewrite(s"http://$h/robots.txt"),
           requestTimeoutMs, window,
           // robots bodies cap at the conventional 512 KiB (parse the prefix)
-          graft.sources.HttpFetcher.RobotsMaxBodyBytes)
+          HttpFetcher.RobotsMaxBodyBytes)
         .map { case (h, r) =>
           val rules =
             if (r.outcome != Outcome.Ok) graft.core.RobotsRules.allowAll
-            else graft.core.UrlCanon.decodeUtf8(r.body)
+            else UrlCanon.decodeUtf8(r.body)
               .map(graft.core.RobotsRules.parse)
               .getOrElse(graft.core.RobotsRules.allowAll)
           (h, rules.disallows, rules.crawlDelay.getOrElse(0),

@@ -409,6 +409,6 @@ object Similarity {
     // normalization passes in the final job. The cached unit-norm table is
     // the operator's index (resident state of an ANN query); callers that
     // need the memory back clear the session cache after consuming the
-    // result, which is what Bench does between its phases.
+    // result (spark.catalog.clearCache()).
   }
 }

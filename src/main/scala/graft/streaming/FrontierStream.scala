@@ -1,9 +1,9 @@
 package graft.streaming
 
 import graft.core.HostFilter
-import graft.corpus.{CorpusConfig, CorpusGen}
-import graft.functions.UrlFunctions
-import graft.model.{Span, Task}
+import graft.corpus.CorpusConfig
+import graft.model.Task
+import graft.operators.{FetchMode, FrontierStep}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -99,70 +99,36 @@ object FrontierStream {
   }
 
   /** S5 + P1-P6 as one narrow streaming stage: fetch each selected task from
-   * the deterministic corpus (the production HTTP fetcher has the identical
-   * mapPartitions shape, FrontierStep FetchMode.Http), extract hrefs,
-   * resolve + canonicalize + host-split, dedup within the page. Emits
-   * candidate (url, host) pairs. */
+   * the deterministic corpus and emit its candidate (url, host) pairs — the
+   * batch Generator mode's kernel (FrontierStep.corpusCandidates). */
   def fetchExtractStream(spark: SparkSession, tasks: Dataset[Task],
       corpus: CorpusConfig): DataFrame = {
     import spark.implicits._
-    tasks.mapPartitions { it =>
-      it.flatMap { tk =>
-        CorpusGen.resolvePage(corpus, tk.url) match {
-          case CorpusGen.PageLookup.Found(h, p) =>
-            val inPage = new java.util.HashSet[String]()
-            CorpusGen.pageHrefs(corpus, h, p).iterator.flatMap { href =>
-              graft.core.UrlCanon.resolveCanonHost(tk.url, href) match {
-                case Some((u, host)) if inPage.add(u) => Iterator.single((u, host))
-                case _ => Iterator.empty
-              }
-            }
-          case _ => Iterator.empty
-        }
-      }
-    }.toDF("url", "host")
+    tasks.mapPartitions(_.flatMap(tk => FrontierStep.corpusCandidates(corpus, tk.url)))
+      .toDF("url", "host")
   }
 
-  /** The PRODUCTION form of the streaming fetch stage: real sockets via
-   * HttpFetcher (one pooled client per partition), HTML anchor extraction,
-   * fused resolve+canonicalize, within-page dedup — the same mapPartitions
-   * body as the batch engine's FetchMode.Http, minus archive. Every task
-   * emits ONE outcome row (`row_kind = 'outcome'`: ok/err/reject +
-   * error_kind, the reference's TaskProcessResult routing) plus its
-   * candidate rows (`row_kind = 'candidate'`) when the fetch succeeded —
-   * non-Ok fetches are TEED, not dropped. One pass, one fetch per task;
-   * split the two kinds in `foreachBatch` (or two filtered sinks over a
-   * persisted exchange) to route candidates onward and outcomes to metrics/
-   * requeue. */
+  /** The PRODUCTION form of the streaming fetch stage: the batch engine's
+   * FetchMode.Http fetch + extract (FrontierStep.fetchHttp — real sockets,
+   * pooled client, windowed requests, the same page classification), minus
+   * archive. Every task emits ONE outcome row (`row_kind = 'outcome'`:
+   * ok/err/reject + error_kind, the reference's TaskProcessResult routing;
+   * a truncated Ok page carries `Truncated`) plus its candidate rows
+   * (`row_kind = 'candidate'`) when the page is Ok — non-Ok fetches are
+   * TEED, not dropped. One pass, one fetch per task; split the two kinds in
+   * `foreachBatch` (or two filtered sinks over a persisted exchange) to
+   * route candidates onward and outcomes to metrics/requeue. */
   def fetchExtractStreamHttpFull(spark: SparkSession, tasks: Dataset[Task],
       rewrite: String => String, connectTimeoutMs: Int = 5000,
       requestTimeoutMs: Int = 20000, fetchWindow: Int = 16,
       maxBodyBytes: Long = graft.sources.HttpFetcher.DefaultMaxBodyBytes): DataFrame = {
     import spark.implicits._
-    val rw = rewrite
+    val mode = FetchMode.Http(rewrite, connectTimeoutMs, requestTimeoutMs,
+      fetchWindow, maxBodyBytes)
     tasks.mapPartitions { it =>
-      lazy val client = graft.sources.HttpFetcher.sharedClient(connectTimeoutMs)
-      graft.sources.HttpFetcher.fetchWindowed(
-          client, it, (tk: Task) => rw(tk.url), requestTimeoutMs, fetchWindow,
-          maxBodyBytes)
-        .flatMap { case (tk, r) =>
-        val outcome = Iterator.single(
-          ("outcome", tk.url, tk.host, r.outcome, r.error_kind))
-        val candidates =
-          if (r.outcome != graft.model.Outcome.Ok) Iterator.empty
-          else graft.core.UrlCanon.decodeUtf8(r.body) match {
-            case None => Iterator.empty
-            case Some(html) =>
-              val inPage = new java.util.HashSet[String]()
-              graft.core.Extract.rawHrefs(html).iterator.flatMap { href =>
-                graft.core.UrlCanon.resolveCanonHost(tk.url, href) match {
-                  case Some((u, host)) if inPage.add(u) =>
-                    Iterator.single(("candidate", u, host, "", ""))
-                  case _ => Iterator.empty
-                }
-              }
-          }
-        outcome ++ candidates
+      FrontierStep.fetchHttp(it, mode, withSpans = false).flatMap { case (tk, pg) =>
+        Iterator.single(("outcome", tk.url, tk.host, pg.outcome, pg.errorKind)) ++
+          pg.links.iterator.map { case (u, h) => ("candidate", u, h, "", "") }
       }
     }.toDF("row_kind", "url", "host", "outcome", "error_kind")
   }
@@ -178,39 +144,23 @@ object FrontierStream {
       .filter(col("row_kind") === "candidate")
       .select("url", "host")
 
-  /** F2/F3 + robots + J1/J2 on a candidate stream: host filter, robots
-   * rules (corpus ground truth, broadcast), stream-static LEFT ANTI join
-   * against the committed `seen` table (statically known URLs never re-emit)
-   * and stateful first-arrival dedup for URLs discovered twice WITHIN the
+  /** F2/F3 + robots + J1/J2 on a candidate stream: the batch engine's host
+   * filter and corpus robots rules, a stream-static LEFT ANTI join against
+   * the committed `seen` table (statically known URLs never re-emit) and
+   * stateful first-arrival dedup for URLs discovered twice WITHIN the
    * stream. Emits each genuinely-new canonical URL exactly once. */
   def discoverStream(spark: SparkSession, candidates: DataFrame,
       seen: DataFrame, filter: HostFilter, corpus: CorpusConfig): DataFrame = {
-    val f = filter
-    val keepHost = udf((h: String) => f.keep(if (h == null) "" else h))
-    // rules derived per row (see FrontierStep's corpus robots branch): a
-    // broadcast numHosts-sized map would also be rebuilt per RESTART here
-    val robotsOk = udf((host: String, url: String) =>
-      graft.core.Robots.allowed(CorpusGen.robotsForHostName(corpus, host), url))
-    val allowed = candidates
-      .filter(keepHost(col("host")))
-      .filter(robotsOk(col("host"), col("url")))
+    val allowed = FrontierStep.corpusRobotsFilter(
+        FrontierStep.filterHosts(candidates, filter), corpus)
       .join(seen.select("url"), Seq("url"), "left_anti")
     dedupStream(spark, allowed)
   }
 
-  /** Streaming documents → candidate canonical links (append mode). */
+  /** Streaming documents → candidate canonical links (append mode): the
+   * batch CorpusJoin span→links projection (FrontierStep.spanLinks). */
   def linkStream(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"),
-        explode(filter(col("spans"), s => s.getField("kind") === Span.Link)).as("span"))
-      .select(col("doc_id").as("base_url"), col("span.media_ref").as("href"))
-      .withColumn("resolved", UrlFunctions.resolveHref(col("base_url"), col("href")))
-      .filter(col("resolved").isNotNull)
-      .withColumn("url", UrlFunctions.canonicalizeUrl(col("resolved")))
-      .filter(col("url").isNotNull)
-      .withColumn("host", UrlFunctions.urlHost(col("url")))
-      .filter(col("host").isNotNull)
-      .select("base_url", "url", "host")
+    FrontierStep.spanLinks(docs.select(col("doc_id").as("base_url"), col("spans")))
 
   /** Watermarked sliding-window outcome counts over a streaming outcomes
    * feed (gen, url, outcome, error_kind, ts). */

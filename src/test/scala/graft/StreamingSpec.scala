@@ -139,21 +139,21 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     import s.implicits._
     import graft.corpus.CorpusGen
     import graft.model.Task
-    import graft.operators.{CrawlConfig, FrontierStep}
+    import graft.operators.{CrawlConfig, FrontierStep, SeenPrefilter}
     val corpus = CorpusConfig(seed = 42L, numHosts = 10, maxPages = 20)
     val cfg = CrawlConfig(corpus = corpus, perHostCap = 2,
       fetchMode = graft.operators.FetchMode.Generator)
     val docs = CorpusTables.documents(spark, cfg.corpus)
     val seeds = CorpusGen.seeds(corpus, 3)
     val f0 = FrontierStep.seedFrontier(spark, seeds)
-    val step1 = FrontierStep.step(spark, f0, f0.select("url"), None, docs, cfg, 0)
+    val step1 = FrontierStep.step(spark, f0, f0.select("url"), SeenPrefilter.Off, docs, cfg, 0)
     val taskCols = Seq("url", "host", "priority", "next_fetch", "retry_count", "gen")
     val frontier1 = step1.nextFrontier.select(taskCols.map(col): _*).persist()
     val seen1 = f0.select("url").union(step1.discovered.select("url")).persist()
     assert(frontier1.count() > 0)
 
     // ---- batch reference: generation 2
-    val step2 = FrontierStep.step(spark, frontier1, seen1, None, docs, cfg, 1)
+    val step2 = FrontierStep.step(spark, frontier1, seen1, SeenPrefilter.Off, docs, cfg, 1)
     val batchSelected = step2.outcomes.select("url").collect().map(_.getString(0)).toSet
     val batchDiscovered = step2.discovered.select("url").collect().map(_.getString(0)).toSet
     assert(batchSelected.nonEmpty && batchDiscovered.nonEmpty)
@@ -275,20 +275,28 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   test("streaming HTTP fetch TEES non-Ok outcomes (one outcome row per task)") {
     // the Full form must not drop failed fetches: every task emits exactly
     // one outcome row from the same single-fetch pass that emits candidates;
-    // a 404 page arrives as err/InvalidPage with zero candidate rows
+    // a 404 page arrives as err/InvalidPage with zero candidate rows, and so
+    // does a 200 page whose body is not valid UTF-8 (the reference's Parsing
+    // error) — classified exactly as the batch Http step classifies it
     val s = spark
     import s.implicits._
     import graft.corpus.CorpusGen
     val corpus = CorpusConfig(seed = 42L, numHosts = 4, maxPages = 8)
+    // an anchor the page would yield if its body were decoded leniently,
+    // followed by a byte that is never valid UTF-8
+    val malformedBody = "<html><body><a href=\"http://leak.example/x\">x</a>"
+      .getBytes("UTF-8") ++ Array(0xff.toByte, 0xfe.toByte)
     val server = com.sun.net.httpserver.HttpServer.create(
       new java.net.InetSocketAddress("127.0.0.1", 0), 0)
     server.createContext("/", (ex: com.sun.net.httpserver.HttpExchange) => {
       val raw = ex.getRequestURI.getRawPath.stripPrefix("/")
-      val (status, body) = CorpusGen.resolvePage(corpus, s"http://$raw") match {
-        case CorpusGen.PageLookup.Found(h, p) => (200, CorpusGen.pageHtml(corpus, h, p))
-        case _ => (404, "gone")
-      }
-      val bytes = body.getBytes("UTF-8")
+      val (status, bytes) =
+        if (raw.startsWith("malformed.example/")) (200, malformedBody)
+        else CorpusGen.resolvePage(corpus, s"http://$raw") match {
+          case CorpusGen.PageLookup.Found(h, p) =>
+            (200, CorpusGen.pageHtml(corpus, h, p).getBytes("UTF-8"))
+          case _ => (404, "gone".getBytes("UTF-8"))
+        }
       ex.sendResponseHeaders(status, bytes.length.toLong)
       ex.getResponseBody.write(bytes)
       ex.close()
@@ -302,10 +310,10 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
         s"http://127.0.0.1:$port/$host" + graft.core.Robots.pathOf(url)
       }
       val good = CorpusGen.seeds(corpus, 2)
-      val bad = Seq("http://no-such-host.example/missing")
+      val bad = Seq("http://no-such-host.example/missing", "http://malformed.example/page")
       val fDir = Files.createTempDirectory("graft-tee").toString
-      graft.operators.FrontierStep.seedFrontier(spark, good ++ bad)
-        .coalesce(1).write.mode("overwrite").parquet(fDir)
+      val frontier = graft.operators.FrontierStep.seedFrontier(spark, good ++ bad)
+      frontier.coalesce(1).write.mode("overwrite").parquet(fDir)
       val schema = spark.read.parquet(fDir).schema
       val tasks = spark.readStream.schema(schema).parquet(fDir)
         .as[graft.model.Task]
@@ -324,8 +332,19 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
       bad.foreach(u => assert(byUrl(u) == (("err", "InvalidPage")), s"$u → ${byUrl(u)}"))
       val cands = rows.filter(_._1 == "candidate")
       assert(cands.nonEmpty, "good pages should still emit candidates")
-      assert(!cands.exists(c => bad.exists(b => c._2.contains("no-such-host"))),
+      assert(!cands.exists(c => c._2.contains("no-such-host") || c._2.contains("leak.example")),
         "a failed fetch emitted candidates")
+
+      // the batch Http step classifies the same pages identically
+      val cfg = graft.operators.CrawlConfig(corpus = corpus, useRobots = false,
+        fetchMode = graft.operators.FetchMode.Http(rewrite))
+      val step = graft.operators.FrontierStep.step(spark, frontier, frontier.select("url"),
+        graft.operators.SeenPrefilter.Off, CorpusTables.documents(spark, corpus), cfg, 0)
+      val batch = step.outcomes.collect()
+        .map(r => r.getString(1) -> ((r.getString(2), r.getString(3)))).toMap
+      step.persisted.foreach(_.unpersist())
+      good.foreach(u => assert(batch(u) == (("ok", "")), s"batch $u → ${batch(u)}"))
+      bad.foreach(u => assert(batch(u) == (("err", "InvalidPage")), s"batch $u → ${batch(u)}"))
     } finally server.stop(0)
   }
 
